@@ -36,7 +36,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from surya_spark import datagen, pipeline  # noqa: E402
-from surya_spark.session import get_spark  # noqa: E402
+from surya_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 HEADLINE = [
     "pricing_summary",
@@ -169,7 +169,7 @@ def extract_stage_times(spark, docs, blobs, par: int) -> dict[str, float]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else 0.1
     # enough docs that the extraction measurement is compute-bound, not

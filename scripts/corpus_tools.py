@@ -19,7 +19,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from surya_spark.session import get_spark  # noqa: E402
+from surya_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 from surya_spark.training import dedup, similarity, textstats  # noqa: E402
 
 
@@ -34,7 +34,7 @@ def main() -> None:
     ap.add_argument("-k", type=int, default=5)
     ap.add_argument("--dim", type=int, default=None)
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=DEFAULT_CPUS)
     args = ap.parse_args()
 
     spark = get_spark(app=f"corpus_{args.cmd}", cores=args.cores)

@@ -32,7 +32,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from surya_spark import datagen, pipeline  # noqa: E402
-from surya_spark.session import get_spark  # noqa: E402
+from surya_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 from surya_spark.sources import json_sink  # noqa: E402
 
 
@@ -59,7 +59,7 @@ def main() -> None:
                          "page per media_ref in DIR (the reference's "
                          "KaTeX debug renderer; sources/render_html.py)")
     ap.add_argument("--cores", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=DEFAULT_CPUS)
     args = ap.parse_args()
 
     spark = get_spark(app="surya_spark_extract", cores=args.cores)

@@ -20,3 +20,9 @@ Design rules (SURVEY.md §7.0):
 """
 
 __version__ = "0.1.0"
+
+# Python workers re-read every zip/jar directory on each task unless the
+# archive cache check is stat-based; see zipimport_cache.py
+from . import zipimport_cache as _zipimport_cache  # noqa: E402
+
+_zipimport_cache.install()

@@ -97,6 +97,11 @@ def extract(
         46 s end-to-end; persisted ≈ half);
       * ocr_lines feeds TWO when with_tables (cell-text assignment and
         free-line assembly);
+      * so do the table cells (the free-line anti-join and the cell
+        spans): Catalyst prunes the anti-join's read of the cells to a
+        distinct over their boxes, a plan branch of its own, so an
+        unpinned cells frame runs the table pass — and its model slot —
+        twice per table crop;
       * pages itself has ONE consumer on the default path (the combined
         fused_all_crops pass decodes once and emits both crop families)
         and is deliberately NOT persisted — at corpus scale the raw page
@@ -121,7 +126,7 @@ def extract(
     except (TypeError, ValueError):
         par = spark.sparkContext.defaultParallelism
 
-    # caching.scope: persisted stages (pages, ocr_lines, table items) are
+    # caching.scope: persisted stages (crop union, ocr_lines, cells) are
     # released by the first action on the returned spans — no
     # InMemoryRelation leaks across queries in a long-lived session
     with caching.scope() as (handles, is_owner):
@@ -202,6 +207,8 @@ def extract(
         if with_tables:
             cells = tables.table_stage_from_crops(crops_t, ocr_lines,
                                                   table_slot)
+            if persist:
+                cells = caching.managed(cells)
 
         return caching.owned(
             assemble.assemble_spans(documents, ocr_lines, cells),

@@ -13,16 +13,37 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the machine)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API outside Linux
+        return os.cpu_count() or 1
+
+
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Half the host's physical memory in whole GiB, within [1g, 24g]."""
+    if total_bytes is None:
+        try:
+            total_bytes = (os.sysconf("SC_PAGE_SIZE")
+                           * os.sysconf("SC_PHYS_PAGES"))
+        except (AttributeError, ValueError, OSError):
+            return "24g"
+    return f"{max(1, min(24, total_bytes // 2 // 2**30))}g"
+
+
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or host_cpus())
 
 
 def get_spark(
     app: str = "surya_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "24g",
+    driver_memory: str | None = None,
 ) -> SparkSession:
     cores = cores or DEFAULT_CPUS
+    driver_memory = driver_memory or default_driver_memory()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # AQE defaults ON (coalescing + skew splitting matter at real scale).
     # SPARK_GRAFT_AQE=0 turns it off: its per-stage driver re-planning is a

@@ -210,3 +210,56 @@ def test_extract_no_page_blob_persist(spark):
     for chunk in im_chunks[1:]:
         cols = chunk.split("\n", 1)[0]
         assert "img_bytes" not in cols, cols
+
+
+def _extract_inputs(spark, tmp_path, n_docs):
+    """datagen inputs written to parquet, so the extract plan's only
+    MapInPandas nodes are the pipeline's own (datagen builds with one)."""
+    from surya_spark import datagen
+
+    datagen.gen_documents(spark, n_docs, partitions=2).write.parquet(
+        str(tmp_path / "docs"))
+    datagen.gen_page_blobs(spark, n_docs, partitions=2).write.parquet(
+        str(tmp_path / "blobs"))
+    return (spark.read.parquet(str(tmp_path / "docs")),
+            spark.read.parquet(str(tmp_path / "blobs")))
+
+
+def test_extract_one_map_in_pandas_per_udf(spark, tmp_path):
+    """The default extract plan runs each logical UDF once: page pass,
+    recognize and table cells. The formatted explain repeats a cached
+    subtree under every InMemoryTableScan with the same node id, so
+    distinct ids count plan nodes. An unpinned cells frame gave the
+    table pass a second node (the free-line anti-join's distinct)."""
+    import contextlib
+    import io
+    import re
+
+    from surya_spark import pipeline
+
+    docs, blobs = _extract_inputs(spark, tmp_path, 12)
+    out = pipeline.extract(docs, blobs, with_tables=True)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        out.explain("formatted")
+    ids = set(re.findall(r"MapInPandas \((\d+)\)", buf.getvalue()))
+    assert len(ids) == 3, ids
+
+
+def test_extract_table_slot_once_per_crop(spark, tmp_path):
+    from surya_spark import pipeline
+    from surya_spark.operators import fused, slots
+
+    docs, blobs = _extract_inputs(spark, tmp_path, 24)
+    calls = spark.sparkContext.accumulator(0)
+
+    def counting_table(blob):
+        calls.add(1)
+        return slots.surrogate_table(blob)
+
+    pipeline.extract(docs, blobs, with_tables=True,
+                     table_slot=counting_table).collect()
+    n_crops = fused.table_crops(
+        fused.fused_all_crops(pipeline.pages_for(docs, blobs))).count()
+    assert n_crops > 0
+    assert calls.value == n_crops

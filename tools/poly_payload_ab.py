@@ -19,12 +19,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench  # noqa: E402
 from surya_spark import datagen, pipeline  # noqa: E402
 from surya_spark.operators import detection, reading_order, recognition  # noqa: E402
-from surya_spark.session import get_spark  # noqa: E402
+from surya_spark.session import DEFAULT_CPUS, get_spark  # noqa: E402
 
 
 def main() -> None:
     sf = float(os.environ.get("SPARK_GRAFT_SF", "0.1"))
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = DEFAULT_CPUS
     rounds = int(os.environ.get("SPARK_GRAFT_REPS", "3"))
     n_docs = max(50, int(40000 * sf))
     spark = get_spark(app="poly_payload_ab", cores=cpus,
